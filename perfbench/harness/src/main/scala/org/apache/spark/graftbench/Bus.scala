@@ -1,0 +1,10 @@
+package org.apache.spark.graftbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, which Spark keeps package-private. */
+object Bus {
+  /** Blocks until every event posted so far has reached every listener,
+    * so a listener read right after an action sees all of its jobs. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+}
