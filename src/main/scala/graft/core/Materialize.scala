@@ -1,9 +1,13 @@
 package graft.core
 
+import java.util.concurrent.TimeoutException
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 
 /** The engine's single intra-query materialization strategy point.
   *
@@ -112,7 +116,7 @@ object Materialize {
       metrics: Seq[Column]): (DataFrame, Map[String, Any]) = {
     require(metrics.nonEmpty, "observed() needs at least one metric")
     val s = df.sparkSession
-    val obs = org.apache.spark.sql.Observation()
+    val obs = Observation()
     val withObs = df.observe(obs, metrics.head, metrics.tail: _*)
     val out = mode(s) match {
       case "reliable" =>
@@ -121,22 +125,24 @@ object Materialize {
         s.read.parquet(p)
       case _ => withObs.localCheckpoint()
     }
-    // Env-gated FINAL-plan dump (`SPARK_GRAFT_MAT_EXPLAIN=1`): after the
-    // action, the AdaptiveSparkPlan is final — the only view that shows
-    // runtime ReusedExchange / AQEShuffleRead decisions (plans evidence;
-    // diagnostic only).
-    if (sys.env.contains("SPARK_GRAFT_MAT_EXPLAIN")) {
-      println(s"===== materialize[$hint] executed plan =====")
-      println(withObs.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+    (out, awaitObservation(obs, hint, ObservationTimeout))
+  }
+
+  /** Bound on the wait for an observation's metrics. The action above has
+    * already finished and Spark delivers the metrics through the async
+    * listener bus right after it, so the wait is normally short; a lost
+    * delivery must fail loud rather than block the driver forever
+    * (`Observation.get` has no timeout). */
+  private val ObservationTimeout: FiniteDuration = 120.seconds
+
+  private[graft] def awaitObservation(obs: Observation, hint: String,
+      timeout: FiniteDuration): Map[String, Any] = {
+    val row = try Await.result(obs.future, timeout) catch {
+      case _: TimeoutException => throw new IllegalStateException(
+        s"materialize[$hint]: observed metrics not delivered within " +
+          s"$timeout of the materialize action")
     }
-    if (sys.env.contains("SPARK_GRAFT_OBS_DEBUG")) {
-      val t0 = System.nanoTime()
-      val m = obs.get
-      println(f"[obs-debug] $hint get-wait ${(System.nanoTime() - t0) / 1e6}%.1f ms")
-      (out, m)
-    } else
-      (out, obs.get) // the materialize was eager, so get() has its metrics
+    row.getValuesMap[Any](row.schema.fieldNames.toSeq)
   }
 
   /** Postfix syntax so call sites read like the `.localCheckpoint()`

@@ -28,19 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
-  /** Env-gated interior-plan dump (`SPARK_GRAFT_CC_EXPLAIN=1`): the CC
-    * loop's per-round frames live behind `materialize` boundaries, so the
-    * final query explain shows only ExistingRDD scans — this prints the
-    * round's plan BEFORE it is materialized, which is the only view that
-    * shows the Exchange structure the optimization claims are about
-    * (plans/r17 evidence; diagnostic only, never on in bench/verify). */
-  private def ccExplain(tag: String, df: DataFrame): Unit =
-    if (sys.env.contains("SPARK_GRAFT_CC_EXPLAIN")) {
-      println(s"===== cc-interior $tag =====")
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    }
-
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.df(s, dir, "documents")
 
@@ -353,9 +340,8 @@ object DedupOps {
   // miss B — one more miss proves J < t, and a non-(−1) return is the
   // EXACT intersection, so the surviving pairs' jac is bit-identical
   // to the unbudgeted division.
-  /** Test/measurement override for [[exactVerify]]'s broadcast decision
-    * (spec pins the forced shuffle-hash plan; the sf1.0 forced-run ledger
-    * row uses the `SPARK_GRAFT_VERIFY_BC=false` env form). */
+  /** Test-only override for [[exactVerify]]'s broadcast decision (spec
+    * pins the forced shuffle-hash plan). */
   @volatile private[graft] var verifyBcOverride: Option[Boolean] = None
 
   /** TEST-ONLY ablation knobs (SaltedPlanGuardSpec). The salted kernels'
@@ -383,19 +369,15 @@ object DedupOps {
     * measured plateau point. */
   private def saltGroupB(s: SparkSession): Int = {
     // The sweep override is deliberately validated and LOUD: a stray
-    // `SET graft.dedup.groupB=<huge>` (or a leftover SPARK_GRAFT_GROUPB
-    // in the shell) would silently disable hot-token salting with
-    // byte-identical output — the straggler-restoring failure class the
-    // ablation knobs were kept off confs to prevent. Reject anything
-    // that isn't a positive int naming its source, and echo any
+    // `SET graft.dedup.groupB=<huge>` would silently disable hot-token
+    // salting with byte-identical output — the straggler-restoring
+    // failure class the ablation knobs were kept off confs to prevent.
+    // Reject anything that isn't a positive int, and echo any
     // non-default width so sweep overrides are visible in tool output.
-    val fromConf = s.conf.getOption("graft.dedup.groupB")
-      .map(v => ("session conf graft.dedup.groupB", v))
-    val src = fromConf.orElse( // fresh-JVM sweep tools
-      sys.env.get("SPARK_GRAFT_GROUPB").map(v => ("env SPARK_GRAFT_GROUPB", v)))
-    src match {
+    val where = "session conf graft.dedup.groupB"
+    s.conf.getOption("graft.dedup.groupB") match {
       case None => 1024
-      case Some((where, raw)) =>
+      case Some(raw) =>
         val v = try raw.trim.toInt catch {
           case _: NumberFormatException => throw new IllegalArgumentException(
             s"$where must be a positive int (docs per salt group); got '$raw'")
@@ -442,21 +424,10 @@ object DedupOps {
     // and cap at the lower of a fixed budget and a fraction of the
     // live driver heap (TWO copies broadcast: the doc_a and doc_b
     // aliases).
-    // Resolve the override/env decision FIRST: the count+sum estimation
-    // is itself a Spark job over the sets frame, and a forced run
-    // (verifyBcOverride or SPARK_GRAFT_VERIFY_BC) must not pay that
-    // wasted pass. Env parse is defensive — a malformed value names the
-    // variable instead of surfacing a bare toBoolean exception.
-    val forced = verifyBcOverride.orElse(
-      sys.env.get("SPARK_GRAFT_VERIFY_BC").map { v =>
-        v.trim.toLowerCase match {
-          case "true" | "1" => true
-          case "false" | "0" => false
-          case other => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_VERIFY_BC must be true/false, got '$other'")
-        }
-      })
-    val bc = forced.getOrElse {
+    // Resolve the override FIRST: the count+sum estimation is itself a
+    // Spark job over the sets frame, and a forced run must not pay that
+    // wasted pass.
+    val bc = verifyBcOverride.getOrElse {
       val (n, e) = est.getOrElse {
         val st = sets.agg(count(lit(1)).as("n"),
           coalesce(sum(size(col("hs"))), lit(0L)).as("e")).head()
@@ -1087,31 +1058,33 @@ object DedupOps {
     *
     * Scale shape: each round is one edge-sized shuffle (edge⋈label +
     * min-agg on node) followed by a LABEL-sized pointer-jump self-join
-    * (component ← label(component)) — the hop extends each node's view
-    * by one edge, the jump then doubles the label-pointer depth, so
-    * convergence needs O(log diameter) rounds instead of O(diameter)
-    * (r16 measurement, sf0.1 dedup graph of diameter ~7: 8 rounds /
-    * 9.5 s → 5 rounds / 4.2 s for the loop; at sf10 the pair-graph
-    * diameter exceeds 16, where plain propagation burned its whole
-    * budget and restarted on the fallback). The label frame is one row
-    * per node — orders below the adjacency — so the extra jump shuffle
-    * per round is cheap at every scale next to the edge rounds it
-    * eliminates. The FIRST round is fused into label initialization:
-    * labels₀ = min(self, direct neighbors) is one aggregate over the
-    * adjacency (exchange-free on a bucketed `symAdj`), where the old
-    * shape paid a distinct() scan just to seed labels = self. Labels
-    * are localCheckpoint-ed per round to keep lineage bounded (same
-    * discipline as [[graft.examples.PageRank.runUntil]]); the jump
-    * result is materialized separately so the next round's two
-    * consumers (edge join + convergence sum) read blocks, not a
-    * recomputed self-join.
+    * (component ← label(component)), built by [[ccRoundPlan]]. The hop
+    * extends each node's view by one edge; the jump then follows the
+    * label pointer one level. Where ids INCREASE along paths (a node's
+    * label is an ancestor that already holds a smaller label) the jump
+    * doubles the pointer depth, so convergence needs O(log diameter)
+    * rounds (r16 measurement, sf0.1 dedup graph of diameter ~7: 8
+    * rounds / 9.5 s → 5 rounds / 4.2 s for the loop). Where they do
+    * not — shuffled ids on a long path — the label a node points at is
+    * usually not yet final, and rounds grow close to LINEARLY with the
+    * diameter: a driver-side replay of this loop needs 11–52 rounds
+    * (median 24, 50 seeds) on a 64-node chain with shuffled ids and
+    * 192–620 on a 1,000-node one, where ordered ids settle a 40-chain
+    * in 5. The label frame is one row per node — orders below the
+    * adjacency — so the jump is cheap next to the edge shuffle. The
+    * FIRST round is fused into label initialization ([[ccSeedLabels]]:
+    * one aggregate over the adjacency, exchange-free on a bucketed
+    * `symAdj`). Each round's labels are materialized once (lineage
+    * stays bounded, same discipline as
+    * [[graft.examples.PageRank.runUntil]]) so the next round's
+    * consumers read blocks, not a recomputed self-join.
     *
-    * Rounds-budget crossover: with jumping, `crossoverAfter` rounds
-    * cover components of diameter ~2^crossoverAfter, so the
-    * [[connectedComponentsAltStar]] fallback is a near-unreachable
-    * safety net rather than the expected path for chain graphs — but it
-    * stays: propagation's convergence argument is empirical per corpus,
-    * the doubling algorithm's is a theorem. */
+    * Rounds-budget crossover: after `crossoverAfter` unconverged rounds
+    * the loop restarts on [[connectedComponentsAltStar]], whose rounds
+    * are O(log n) whatever the id order. For long paths with unordered
+    * ids that fallback is the expected path, not a safety net: a
+    * shuffled 64-chain exceeds the default budget of 8 (DedupCCSpec
+    * pins both sides). */
   def connectedComponents(edges: DataFrame, maxRounds: Int = 50,
       crossoverAfter: Int = 8, symAdj: Option[DataFrame] = None): DataFrame = {
     // materialize the (usually expensive) edge plan ONCE — without this
@@ -1163,9 +1136,7 @@ object DedupOps {
     // row anyway, so a separately scheduled 1-row aggregate job per
     // round paid pure driver/AQE latency (~the per-round floor at bench
     // SF; r16 profile).
-    val labelsPlan = sym.groupBy("src").agg(min("dst").as("mn"))
-      .select(col("src").as("node"),
-        least(col("src"), col("mn")).as("component"))
+    val labelsPlan = ccSeedLabels(sym)
     val numericIds = {
       import org.apache.spark.sql.types._
       labelsPlan.schema("component").dataType match {
@@ -1187,41 +1158,7 @@ object DedupOps {
     var round = 0
     val budget = math.min(maxRounds, crossoverAfter)
     while (changed && round < budget) {
-      // every node also keeps its own label: union(self, neighbor labels)
-      val fromNbr = sym.join(labels, sym("src") === labels("node"))
-        .select(col("dst").as("node"), col("component"))
-      // The explicit non-null filter is REUSE-load-bearing, not a
-      // semantic guard (node ids are non-null by construction on every
-      // caller's graph; a null endpoint is not a node): the left-outer
-      // jump join infers `isnotnull` on its build side's key and pushes
-      // it below the aggregate — which made the build subtree
-      // canonically DIFFERENT from the probe subtree, so the edge-sized
-      // union shuffle ran twice per round (observed: twin
-      // ShuffleQueryStages with identical statistics). Filtering both
-      // columns on the SHARED plan subsumes the inferred filter via
-      // constraint propagation and restores exchange identity.
-      val hopped = labels.select("node", "component").union(fromNbr)
-        .groupBy("node").agg(min("component").as("component"))
-        .filter(col("node").isNotNull && col("component").isNotNull)
-      // pointer jump: component ← label(component). Every label IS a
-      // node id (min over node ids), so the lookup side is `hopped`
-      // itself; left join + coalesce only guards the isolated-node
-      // degenerate case. Hop and jump are ONE plan and ONE action per
-      // round (r17): the self-join's two sides share the hop's
-      // Exchange(node) via ReusedExchange — the edge-sized union +
-      // partial aggregate computes ONCE, only the label-sized final
-      // aggregate runs per side — so the round no longer pays a second
-      // materialize plus its driver/AQE gap (guide §2.4/§2.6; the plan
-      // is pinned by plans/r17/cc_round_interior_after.txt and the
-      // reuse by DedupCCSpec).
-      val parent = hopped.select(
-        col("node").as("p_node"), col("component").as("p_comp"))
-      val nextPlan = hopped
-        .join(parent, hopped("component") === parent("p_node"), "left")
-        .select(hopped("node"),
-          coalesce(col("p_comp"), hopped("component")).as("component"))
-      if (round == 0) ccExplain("fused-hop-jump", nextPlan)
-      val (next, nextSum) = materializeSummed(nextPlan)
+      val (next, nextSum) = materializeSummed(ccRoundPlan(sym, labels))
       if (numericIds) {
         changed = nextSum.compareTo(prevSum) != 0
         prevSum = nextSum
@@ -1235,7 +1172,8 @@ object DedupOps {
     }
     // test observability (DedupCCSpec): rounds the propagation loop ran
     // when it converged itself, -1 when the alt-star fallback took over
-    // — the pointer-jump's O(log diameter) claim is pinned on this.
+    // — the ordered-id round bound and the shuffled-id fallback are
+    // pinned on this.
     lastPropagationRounds = if (changed) -1 else round
     if (changed) connectedComponentsAltStar(edges, maxRounds)
     else labels
@@ -1245,6 +1183,54 @@ object DedupOps {
     * propagation run on this thread's ordering (tests only — benches and
     * queries never read it). */
   @volatile private[graft] var lastPropagationRounds: Int = -1
+
+  /** labels₀ = min(self, direct neighbors) over the symmetrized
+    * adjacency: [[connectedComponents]]' first round, fused into the
+    * seed. */
+  private[graft] def ccSeedLabels(sym: DataFrame): DataFrame =
+    sym.groupBy("src").agg(min("dst").as("mn"))
+      .select(col("src").as("node"),
+        least(col("src"), col("mn")).as("component"))
+
+  /** One fused hop + pointer-jump round of [[connectedComponents]] over
+    * the symmetrized adjacency `sym` (src, dst) and the current `labels`
+    * (node, component); returns the next labels plan, unmaterialized.
+    * Also the entry point for `graft.tools.Profile plan cc` and the
+    * ReusedExchange pin in DedupCCSpec, so all three see one plan. */
+  private[graft] def ccRoundPlan(sym: DataFrame, labels: DataFrame): DataFrame = {
+    // every node also keeps its own label: union(self, neighbor labels)
+    val fromNbr = sym.join(labels, sym("src") === labels("node"))
+      .select(col("dst").as("node"), col("component"))
+    // The explicit non-null filter is REUSE-load-bearing, not a
+    // semantic guard (node ids are non-null by construction on every
+    // caller's graph; a null endpoint is not a node): the left-outer
+    // jump join infers `isnotnull` on its build side's key and pushes
+    // it below the aggregate — which made the build subtree
+    // canonically DIFFERENT from the probe subtree, so the edge-sized
+    // union shuffle ran twice per round (observed: twin
+    // ShuffleQueryStages with identical statistics). Filtering both
+    // columns on the SHARED plan subsumes the inferred filter via
+    // constraint propagation and restores exchange identity.
+    val hopped = labels.select("node", "component").union(fromNbr)
+      .groupBy("node").agg(min("component").as("component"))
+      .filter(col("node").isNotNull && col("component").isNotNull)
+    // pointer jump: component ← label(component). Every label IS a
+    // node id (min over node ids), so the lookup side is `hopped`
+    // itself; left join + coalesce only guards the isolated-node
+    // degenerate case. Hop and jump are ONE plan and ONE action per
+    // round (r17): the self-join's two sides share the hop's
+    // Exchange(node) via ReusedExchange — the edge-sized union +
+    // partial aggregate computes ONCE, only the label-sized final
+    // aggregate runs per side — so the round does not pay a second
+    // materialize plus its driver/AQE gap (guide §2.4/§2.6). DedupCCSpec
+    // "the fused CC round reuses the hop exchange" pins the reuse.
+    val parent = hopped.select(
+      col("node").as("p_node"), col("component").as("p_comp"))
+    hopped
+      .join(parent, hopped("component") === parent("p_node"), "left")
+      .select(hopped("node"),
+        coalesce(col("p_comp"), hopped("component")).as("component"))
+  }
 
   /** Connected components by alternating large-star / small-star
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",

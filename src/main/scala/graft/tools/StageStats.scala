@@ -1,11 +1,12 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 import scala.collection.mutable
 
 /** Per-stage metrics collector for scale diagnosis: wall, task-time sum,
-  * GC, shuffle read/write, memory+disk spill, peak task count. Attach
+  * GC, shuffle read/write, memory+disk spill, peak task count, plus the
+  * number of jobs started since the last reset(). Attach
   * before the measured action, then `report()` prints the top stages by
   * task-time — the answer to "is this query CPU-, spill-, or
   * IO-bound?" that wall-clock alone can't give.
@@ -23,6 +24,17 @@ class StageStats extends SparkListener {
     var peakExecMemB: Long = 0)
 
   private val stages = mutable.Map.empty[Int, Agg]
+  private var jobStarts = 0
+
+  private def isSentinel(stageName: String) = stageName.contains("StageStats.scala")
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+    if (!j.stageInfos.exists(s => isSentinel(s.name))) jobStarts += 1
+  }
+
+  /** Jobs started since the last reset(), drain() sentinels excluded;
+    * read it after a drain() so every start of the measured body landed. */
+  def jobs: Int = synchronized(jobStarts)
 
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
     val a = stages.getOrElseUpdate(t.stageId, Agg())
@@ -59,7 +71,7 @@ class StageStats extends SparkListener {
     * bus delivered one AFTER drain's deadline, it must not be attributed
     * to the operator under measurement. */
   def report(top: Int = 12): Unit = synchronized {
-    val rows = stages.filterNot(_._2.name.contains("StageStats.scala"))
+    val rows = stages.filterNot(r => isSentinel(r._2.name))
     println("[stagestats] stage tasks wall_s task_s maxtask_s cpu_s gc_s " +
       "shufR_GB shufW_GB spillMem_GB spillDisk_GB input_GB peakMem_MB name")
     rows.toSeq.sortBy(-_._2.taskMs).take(top).foreach { case (id, a) =>
@@ -80,7 +92,7 @@ class StageStats extends SparkListener {
       f"peakMem_MB=${(if (t.isEmpty) 0L else t.map(_.peakExecMemB).max) / 1048576}")
   }
 
-  def reset(): Unit = synchronized { stages.clear() }
+  def reset(): Unit = synchronized { stages.clear(); jobStarts = 0 }
 
   /** Drain the async listener bus before a reset()/report() boundary.
     * Runs a sentinel job and waits until its stage-completion event has
@@ -95,7 +107,7 @@ class StageStats extends SparkListener {
     spark.sparkContext.range(0, 1).count() // stage name = "count at StageStats.scala:NN"
     def sentinelIds = synchronized {
       stages.collect { case (id, a)
-        if !before(id) && a.name.contains("StageStats.scala") => id }.toSeq
+        if !before(id) && isSentinel(a.name) => id }.toSeq
     }
     val deadline = System.nanoTime() + 10L * 1000000000L
     while (sentinelIds.isEmpty && System.nanoTime() < deadline) Thread.sleep(5)

@@ -4,7 +4,10 @@ import graft.operators.DedupOps
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Connected components: the alt-star doubling path vs min-label
-  * propagation, and the rounds-budget crossover between them. */
+  * propagation with pointer jumping, and the rounds-budget crossover
+  * between them. Pointer jumping converges in O(log diameter) rounds only
+  * where ids increase along paths; with unordered ids on a long path its
+  * rounds grow close to linearly, and alt-star is the expected path. */
 class DedupCCSpec extends AnyFunSuite {
 
   lazy val spark = Session.builder("graft-test").master("local[4]")
@@ -35,6 +38,52 @@ class DedupCCSpec extends AnyFunSuite {
       DedupOps.lastPropagationRounds <= 8,
       s"expected propagation (not alt-star fallback) to converge the " +
         s"40-chain; rounds=${DedupOps.lastPropagationRounds}")
+  }
+
+  test("a shuffled-id 64-chain exceeds the default budget and falls back to alt-star") {
+    // the same chain shape with seeded shuffled ids: a pointer lands on a
+    // label that is not final yet, so propagation needs far more rounds
+    // (a driver-side replay of the loop never needed fewer than 11 over
+    // 50 seeds) — past the default budget of 8, alt-star must take over
+    val ids = new scala.util.Random(42).shuffle((1L to 64L).toVector)
+    val chain = ids.zip(ids.tail).toDF("src", "dst")
+    val got = labels(DedupOps.connectedComponents(chain))
+    assert(got == (1L to 64L).map(_ -> 1L).toMap)
+    assert(DedupOps.lastPropagationRounds == -1,
+      "expected the alt-star fallback path")
+  }
+
+  test("the fused CC round reuses the hop exchange") {
+    // parquet-read adjacency (nullable columns, like d06's bucketed one):
+    // the jump join's inferred isnotnull filter would make its two sides
+    // canonically different without ccRoundPlan's explicit filter, and
+    // the union + partial aggregate would be shuffled twice
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (2L, 6L), (7L, 8L))
+    val dir = java.nio.file.Files.createTempDirectory("graft_cc_round").toString
+    (edges ++ edges.map(_.swap)).toDF("src", "dst")
+      .write.mode("overwrite").parquet(dir)
+    val sym = spark.read.parquet(dir)
+    val round = DedupOps.ccRoundPlan(sym,
+      DedupOps.ccSeedLabels(sym).localCheckpoint())
+    // seed labels = min(self, neighbors); one hop + jump on top of them
+    assert(labels(round) ==
+      ((1L to 6L).map(_ -> 1L) ++ Seq(7L -> 7L, 8L -> 7L)).toMap)
+    val root = round.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec]
+    assert(root.isFinalPlan)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val all = nodes(root)
+    val unionShuffles = all.collect {
+      case e: ShuffleExchangeExec if e.exists(_.isInstanceOf[UnionExec]) => e
+    }
+    assert(unionShuffles.size == 1 && all.exists(_.isInstanceOf[ReusedExchangeExec]),
+      root.toString)
   }
 
   test("crossover to alt-star still fires when the budget truly runs out") {

@@ -50,6 +50,34 @@ class MaterializeSpec extends AnyFunSuite {
     assert(got.count() == 10)
   }
 
+  test("observed() delivers the exact metrics in local and reliable modes") {
+    import org.apache.spark.sql.functions._
+    val docs = Tables.df(spark, sf, "documents")
+    val direct = docs.agg(count(lit(1)), sum("n_chars"),
+      sum(when(col("lang").isNull, 1L).otherwise(0L))).head()
+    Seq("local", "reliable").foreach { m =>
+      val (out, got) = withMode(m) {
+        Materialize.observed(docs, "obs-spec", Seq(count(lit(1)).as("rows"),
+          sum("n_chars").as("chars"),
+          sum(when(col("lang").isNull, 1L).otherwise(0L)).as("null_lang")))
+      }
+      assert(got == Map("rows" -> direct.getLong(0),
+        "chars" -> direct.getLong(1), "null_lang" -> direct.getLong(2)), m)
+      assert(out.count() == direct.getLong(0), m)
+    }
+  }
+
+  test("an observation that never fires fails loud within the timeout") {
+    import scala.concurrent.duration._
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      Materialize.awaitObservation(
+        org.apache.spark.sql.Observation("never"), "spec-hint", 200.millis)
+    }
+    assert(e.getMessage.contains("materialize[spec-hint]"))
+    assert((System.nanoTime() - t0) / 1e9 < 10)
+  }
+
   test("d02 near-dup pairs are identical under local and reliable modes") {
     def pairs(m: String) = withMode(m) {
       Queries.byName("d02_minhash_lsh").build(spark, sf)

@@ -50,37 +50,3 @@ class ProgressListenerSpec extends AnyFunSuite {
     assert(io.percentOf(0) == 100.0)
   }
 }
-
-/** Scan-riding audit metrics: observations produce the v01-class counters
-  * without a second pass, captured via the listener manager. */
-class QueryMetricsSpec extends org.scalatest.funsuite.AnyFunSuite {
-  import graft.progress.QueryMetrics
-  import org.apache.spark.sql.functions._
-
-  lazy val spark = Session.builder("graft-test").master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4").getOrCreate()
-
-  test("observed metrics ride the query and match a direct audit pass") {
-    val collector = new QueryMetrics.MetricsCollector
-    spark.listenerManager.register(collector)
-    try {
-      val docs = Tables.df(spark, "/root/testdata/sf0.001", "documents")
-      val audited = QueryMetrics.observed(docs, "docs_audit",
-        count(lit(1)).as("rows"),
-        sum(when(col("lang").isNull, 1L).otherwise(0L)).as("null_lang"),
-        sum(when(col("n_chars") <= 0, 1L).otherwise(0L)).as("empty_docs"))
-      // the pipeline's own job: a grouped count (audit adds no job)
-      val grouped = audited.groupBy("lang").count().collect()
-      assert(grouped.nonEmpty)
-
-      val deadline = System.currentTimeMillis() + 30000
-      while (collector.get("docs_audit").isEmpty
-        && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      val m = collector.get("docs_audit").get
-      val n = docs.count()
-      assert(m("rows") == n)
-      assert(m("null_lang") == 0L)
-      assert(m("empty_docs") == 0L)
-    } finally spark.listenerManager.unregister(collector)
-  }
-}

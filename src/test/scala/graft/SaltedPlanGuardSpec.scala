@@ -147,7 +147,7 @@ class SaltedPlanGuardSpec extends AnyFunSuite {
   }
 
   test("d02 forced exact-verify attaches are ShuffledHashJoins on doc_a/doc_b, never sort-merged") {
-    // SPARK_GRAFT_VERIFY_BC=false is the >2M-doc production path; the
+    // a forced shuffle-hash verify is the >2M-doc production path; the
     // band-join SHJ is pinned by DedupHotBucketSpec, this pins the two
     // verify attaches (an SMJ here external-sorts the array-laden
     // candidate frame — the measured 46–55× decade cliff)
