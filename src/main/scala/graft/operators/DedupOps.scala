@@ -52,11 +52,11 @@ object DedupOps {
 
   /** Same representation over an arbitrary frame with (doc_id, text) —
     * the entry point for pipelines running the dedup kernels on an
-    * already-filtered corpus slice (PipelineOps). */
-  private[graft] def hashedWordSetsOf(d: DataFrame): DataFrame =
-    d.select(
-      col("doc_id"),
-      array_sort(transform(wordsExpr, w => xxhash64(w))).as("hs"))
+    * already-filtered corpus slice (PipelineOps), which carry their
+    * `keep` columns along. */
+  private[graft] def hashedWordSetsOf(d: DataFrame, keep: Seq[String] = Nil): DataFrame =
+    d.select(col("doc_id") +: keep.map(col) :+
+      array_sort(transform(wordsExpr, w => xxhash64(w))).as("hs"): _*)
       .withColumn("sz", size(col("hs")))
 
   // ---------------------------------------------------------------- d01
@@ -1049,12 +1049,204 @@ object DedupOps {
       LIMIT 20"""))
 
   // ---------------------------------------------------------------- d06
-  /** Connected components by iterative min-label propagation WITH
-    * per-round pointer jumping (path shortcutting).
+  /** Connected components of an undirected graph. `edges` has two columns
+    * (src, dst); returns (node, component) where component = the minimum
+    * node id reachable from `node`. Two paths, chosen by the graph's size:
     *
-    * `edges` must have two columns (src, dst); the graph is treated as
-    * undirected. Returns (node, component) where component = the minimum
-    * node id reachable from `node`.
+    *  - **Driver path**: integral ids (Byte/Short/Int/Long) and at most
+    *    [[driverCcCap]] edges. The edges ship to the driver in ONE job as
+    *    packed `long` arrays, one per partition (not as Rows); union-find
+    *    with the minimum id as root labels them in milliseconds, and the
+    *    labels return as a local relation in the input id type. Spark
+    *    sizes a local relation exactly, so a downstream join (p01's
+    *    left_anti) can broadcast it. No propagation round runs: on the
+    *    bench-sized dedup graph the distributed path's seed and rounds were
+    *    2–6 AQE jobs each at ~60–130 ms apiece, for a graph union-find
+    *    settles at once.
+    *  - **Distributed path** ([[connectedComponentsDistributed]]):
+    *    non-integral ids, a null endpoint, or more edges than the cap.
+    *
+    * The decision costs no extra action over an expensive edge plan. With
+    * no `symAdj`, `edges` is taken to be an un-materialized plan (p01's
+    * pair kernel): its symmetrized adjacency is materialized once, as the
+    * distributed path always did, and the edge and null counts ride that
+    * action as observed metrics; the driver path then collects the
+    * materialized frame. `symAdj`, when given, builds the stored
+    * symmetric adjacency of `edges` and marks `edges` as a stored graph (a
+    * plain scan, d06/d15's [[sharedPairGraph]]): one bounded read of
+    * `cap + 1` edges decides AND ships, and `symAdj` — the adjacency's
+    * count job, shuffle and bucketed write on first use — runs only if
+    * the distributed path does.
+    *
+    * The cap ([[driverCcCap]]): 1/10 of the driver heap at
+    * [[DriverCcBytesPerEdge]] bytes per edge, under the same 1.5 GB
+    * ceiling as [[exactVerify]]'s broadcast guard, and within
+    * `spark.driver.maxResultSize` at 16 bytes per shipped edge. The
+    * bytes-per-edge figure is the driver thread's allocation over the
+    * collect, union-find and local-relation build, measured on the worst
+    * shape — a perfect matching, two new nodes per edge: 508–533 B/edge
+    * at 1M–2M edges (139 B/edge on the sf0.1 pair graph, 965k edges over
+    * 2,923 nodes), rounded up. The cap is 0.78M edges on a 4 GB heap,
+    * 1.56M on 8 GB, and the 1.5 GB ceiling stops it at 2.7M. So the
+    * sf0.001 and sf0.01 pair graphs (9,020 pairs at sf0.01) and the
+    * 500-document bench graph take the driver path on any heap, sf0.1
+    * (0.96M pairs) takes it from a 5 GB heap up and the distributed
+    * path below, and sf1 (10.8M pairs) and sf10 (111M) always take the
+    * distributed path. */
+  def connectedComponents(edges: DataFrame, maxRounds: Int = 50,
+      crossoverAfter: Int = 8, symAdj: Option[() => DataFrame] = None): DataFrame =
+    componentsBySize(edges, maxRounds, crossoverAfter, symAdj,
+      driverCcCap(edges.sparkSession))
+
+  /** Driver bytes per edge of the driver path, measured (see
+    * [[connectedComponents]]). */
+  private val DriverCcBytesPerEdge = 550L
+
+  /** Most edges [[connectedComponents]] labels on the driver. */
+  private def driverCcCap(s: SparkSession): Int = {
+    val heap = math.min(1500000000L, Runtime.getRuntime.maxMemory / 10) /
+      DriverCcBytesPerEdge
+    val maxResult = s.sparkContext.getConf.getSizeAsBytes(
+      "spark.driver.maxResultSize", "1g")
+    val shipped = if (maxResult <= 0) Long.MaxValue else maxResult / 16
+    math.min(math.min(heap, shipped), Int.MaxValue - 1L).toInt
+  }
+
+  /** [[connectedComponents]] with the driver path's edge cap as a
+    * parameter (specs pin the path choice at `cap` = n and n − 1). */
+  private[graft] def componentsBySize(edges: DataFrame, maxRounds: Int,
+      crossoverAfter: Int, symAdj: Option[() => DataFrame], cap: Int): DataFrame = {
+    val e = edges.toDF("src", "dst")
+    val symPlan = symmetrized(e)
+    // the id type the distributed path would output: both endpoints
+    // widened to their common type
+    val idType = symPlan.schema("src").dataType
+    def distributed(sym: Option[DataFrame]): DataFrame =
+      connectedComponentsDistributed(edges, maxRounds, crossoverAfter, sym)
+    if (!integralIds(idType)) distributed(symAdj.map(_()))
+    else symAdj match {
+      case Some(adj) =>
+        val (parts, nulls) = packedEdges(e.limit(cap + 1))
+        if (nulls == 0 && parts.map(_.length / 2L).sum <= cap)
+          localComponents(e.sparkSession, parts, idType)
+        else distributed(Some(adj()))
+      case None =>
+        val (sym, m) = Materialize.observed(symPlan, "sym",
+          Seq(count(lit(1)).as("n"),
+            count(when(col("src").isNull || col("dst").isNull, 1)).as("nulls")))
+        // sym holds both orientations of every edge
+        if (m("nulls") == 0L && m("n").asInstanceOf[Long] <= 2L * cap)
+          localComponents(e.sparkSession,
+            packedEdges(sym.filter(col("src") <= col("dst")))._1, idType)
+        else distributed(Some(sym))
+    }
+  }
+
+  /** (src, dst) rows of `e` as packed longs `[s0, d0, s1, d1, …]`, one
+    * array per partition, in one job; rows with a null endpoint are
+    * counted (second result), not shipped. */
+  private def packedEdges(e: DataFrame): (Array[Array[Long]], Long) = {
+    import e.sparkSession.implicits._
+    val parts = e.select(col("src").cast("long"), col("dst").cast("long"))
+      .mapPartitions { rows =>
+        val b = Array.newBuilder[Long]
+        var nulls = 0L
+        rows.foreach { r =>
+          if (r.isNullAt(0) || r.isNullAt(1)) nulls += 1
+          else { b += r.getLong(0); b += r.getLong(1) }
+        }
+        Iterator((nulls, b.result()))
+      }.collect()
+    (parts.map(_._2), parts.map(_._1).sum)
+  }
+
+  /** Union-find over packed edges (see [[packedEdges]]) with the minimum
+    * id as root: the node ids ascending, and each node's root index. */
+  private def unionFind(parts: Array[Array[Long]]): (Array[Long], Array[Int]) = {
+    val ends = new Array[Long](parts.map(_.length).sum)
+    var o = 0
+    parts.foreach { p => System.arraycopy(p, 0, ends, o, p.length); o += p.length }
+    java.util.Arrays.sort(ends)
+    var n = 0
+    var i = 0
+    while (i < ends.length) {
+      if (n == 0 || ends(n - 1) != ends(i)) { ends(n) = ends(i); n += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(ends, n)
+    // parent links only ever point to a smaller index, so a root is its
+    // component's minimum id (ids are ascending)
+    val parent = Array.tabulate(n)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    parts.foreach { p =>
+      var j = 0
+      while (j < p.length) {
+        val a = find(java.util.Arrays.binarySearch(ids, p(j)))
+        val b = find(java.util.Arrays.binarySearch(ids, p(j + 1)))
+        if (a < b) parent(b) = a else if (b < a) parent(a) = b
+        j += 2
+      }
+    }
+    (ids, Array.tabulate(n)(find))
+  }
+
+  /** The driver path's result: (node, component) as a local relation of
+    * `idType` rows, ordered by node. */
+  private def localComponents(s: SparkSession, parts: Array[Array[Long]],
+      idType: org.apache.spark.sql.types.DataType): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, UnsafeRow}
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.sql.types._
+    def set(r: UnsafeRow, f: Int, v: Long): Unit = idType match {
+      case ByteType => r.setByte(f, v.toByte)
+      case ShortType => r.setShort(f, v.toShort)
+      case IntegerType => r.setInt(f, v.toInt)
+      case _ => r.setLong(f, v)
+    }
+    val (ids, root) = unionFind(parts)
+    // UnsafeRows written in place: no boxed values, ~half the retained
+    // bytes per node of a generic row
+    val rows = Array.tabulate[InternalRow](ids.length) { i =>
+      val r = new UnsafeRow(2)
+      r.pointTo(new Array[Byte](24), 24) // 8-byte null bitset + two slots
+      set(r, 0, ids(i))
+      set(r, 1, ids(root(i)))
+      r
+    }
+    lastPropagationRounds = 0
+    Bridge.ofRows(s, LocalRelation(
+      Seq(AttributeReference("node", idType, nullable = false)(),
+        AttributeReference("component", idType, nullable = false)()),
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(rows)))
+  }
+
+  /** Both orientations of every (src, dst) edge, via EXPLODE: one pass
+    * over the (usually expensive) edge plan — a union(e, e.swapped)
+    * executes the upstream pipeline once per branch (for dedup graphs
+    * that was the whole prefix+verify kernel, twice). REBALANCED for the
+    * materialize that follows: localCheckpoint freezes the partition
+    * count, and the un-rebalanced shape froze the edge plan's full AQE
+    * width — every propagation round then paid per-partition task
+    * overhead on near-empty partitions (p01 at sf0.1: 512 tasks per
+    * round-stage over a 0.2 GB frame). The AQE-sized shuffle right-sizes
+    * partitions to the actual edge bytes at ANY scale: a handful at
+    * sf0.1, hundreds at 100 TB. */
+  private def symmetrized(edges: DataFrame): DataFrame =
+    edges.toDF("src", "dst")
+      .select(explode(array(
+        struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .hint("rebalance")
+
+  /** The distributed path of [[connectedComponents]]: iterative min-label
+    * propagation WITH per-round pointer jumping (path shortcutting).
     *
     * Scale shape: each round is one edge-sized shuffle (edge⋈label +
     * min-agg on node) followed by a LABEL-sized pointer-jump self-join
@@ -1085,37 +1277,22 @@ object DedupOps {
     * ids that fallback is the expected path, not a safety net: a
     * shuffled 64-chain exceeds the default budget of 8 (DedupCCSpec
     * pins both sides). */
-  def connectedComponents(edges: DataFrame, maxRounds: Int = 50,
-      crossoverAfter: Int = 8, symAdj: Option[DataFrame] = None): DataFrame = {
+  private[graft] def connectedComponentsDistributed(edges: DataFrame,
+      maxRounds: Int = 50, crossoverAfter: Int = 8,
+      symAdj: Option[DataFrame] = None): DataFrame = {
     // materialize the (usually expensive) edge plan ONCE — without this
     // every round's join re-runs the upstream pipeline that produced the
     // pairs (for dedup graphs: the whole prefix-filter + verify kernel),
     // turning an O(diameter)-round loop into O(diameter) corpus passes
     // (measured 30 s → 8 s on p01 at sf0.1). The pair graph is tiny
     // relative to the corpus, so this is the 100 TB shape too.
-    // `symAdj`, when given, is an already-symmetrized (src, dst) frame
-    // read from storage BUCKETED on src ([[sharedAdjacency]]) — it is
-    // its own materialization and its bucketing makes the per-round
-    // edge⋈label join exchange-free on the edge side, so it is used
+    // `symAdj`, when given, is an already-symmetrized, already
+    // materialized (src, dst) frame — [[connectedComponents]]' observed
+    // materialize of [[symmetrized]], or [[sharedAdjacency]] read from
+    // storage BUCKETED on src, whose bucketing makes the per-round
+    // edge⋈label join exchange-free on the edge side — so it is used
     // as-is (a localCheckpoint would erase the bucketed partitioning).
-    // Symmetrize via EXPLODE, one pass over the (usually expensive)
-    // edge plan — a union(e, e.swapped) executes the upstream pipeline
-    // once per branch before this materialize (for dedup graphs that
-    // was the whole prefix+verify kernel, twice). REBALANCE before
-    // materializing: localCheckpoint freezes the partition count, and
-    // the un-rebalanced shape froze the edge plan's full AQE width —
-    // every propagation round then paid per-partition task overhead on
-    // near-empty partitions (p01 at sf0.1: 512 tasks per round-stage
-    // over a 0.2 GB frame). The AQE-sized shuffle right-sizes
-    // partitions to the actual edge bytes at ANY scale: a handful at
-    // sf0.1, hundreds at 100 TB.
-    val sym = symAdj.getOrElse(edges.toDF("src", "dst")
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .hint("rebalance")
-      .materialize)
+    val sym = symAdj.getOrElse(symmetrized(edges).materialize)
     // fused round 1: min(self, direct neighbors) in one aggregate over
     // the adjacency — the node set is exactly sym's src side (sym is
     // symmetrized, so every endpoint appears as src), same as the
@@ -1137,13 +1314,7 @@ object DedupOps {
     // round paid pure driver/AQE latency (~the per-round floor at bench
     // SF; r16 profile).
     val labelsPlan = ccSeedLabels(sym)
-    val numericIds = {
-      import org.apache.spark.sql.types._
-      labelsPlan.schema("component").dataType match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      }
-    }
+    val numericIds = integralIds(labelsPlan.schema("component").dataType)
     val sumMetric = coalesce(sum(col("component").cast("decimal(38,0)")),
       lit(0).cast("decimal(38,0)")).as("label_sum")
     def asDecimal(v: Any): java.math.BigDecimal =
@@ -1170,19 +1341,29 @@ object DedupOps {
       labels = next
       round += 1
     }
-    // test observability (DedupCCSpec): rounds the propagation loop ran
-    // when it converged itself, -1 when the alt-star fallback took over
-    // — the ordered-id round bound and the shuffled-id fallback are
-    // pinned on this.
     lastPropagationRounds = if (changed) -1 else round
     if (changed) connectedComponentsAltStar(edges, maxRounds)
     else labels
   }
 
-  /** See [[connectedComponents]]: diagnostic round count of the last
-    * propagation run on this thread's ordering (tests only — benches and
-    * queries never read it). */
+  /** Test observability (DedupCCSpec) of the last [[connectedComponents]]
+    * call: the rounds the propagation loop ran when it converged itself,
+    * -1 when the alt-star fallback took over, and 0 when the driver path
+    * labeled the graph (no propagation round ran; the distributed loop
+    * always runs at least one round before it converges). The
+    * ordered-id round bound, the shuffled-id fallback and the path
+    * choice are pinned on this. Benches and queries never read it. */
   @volatile private[graft] var lastPropagationRounds: Int = -1
+
+  /** The id types both [[connectedComponents]] paths treat as integral:
+    * the driver path's gate and the distributed loop's label-sum check. */
+  private def integralIds(t: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    t match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+  }
 
   /** labels₀ = min(self, direct neighbors) over the symmetrized
     * adjacency: [[connectedComponents]]' first round, fused into the
@@ -1302,7 +1483,7 @@ object DedupOps {
   val d06 = Q("d06_dedup_clusters",
     (s, dir) =>
       connectedComponents(sharedPairGraph(s, dir).select("doc_a", "doc_b"),
-          symAdj = Some(sharedAdjacency(s, dir)))
+          symAdj = Some(() => sharedAdjacency(s, dir)))
         .select(col("node").as("doc_id"), col("component").as("cluster_id"))
         .orderBy("doc_id"),
     Some("""
@@ -1518,8 +1699,8 @@ object DedupOps {
     * The intermediate lives under Materialize's scratch base — a
     * configurable shared filesystem on a cluster (`graft.scratchDir`),
     * deleted on session shutdown. */
-  private val pairGraphMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Double), String]
+  private val pairGraphMemo = scala.collection.concurrent.TrieMap
+    .empty[(String, String, Double), (String, org.apache.spark.sql.types.StructType)]
 
   /** Cheap content fingerprint of everything under `dir`: md5 over the
     * sorted (path, length, mtime) listing via the path's own filesystem
@@ -1542,7 +1723,7 @@ object DedupOps {
       threshold: Double = 0.9): DataFrame = {
     val key = (s.sparkContext.applicationId,
       inputFingerprint(s, dir), threshold)
-    val path = pairGraphMemo.getOrElseUpdate(key, {
+    val (path, schema) = pairGraphMemo.getOrElseUpdate(key, {
       val p = graft.core.Materialize.freshScratchPath(s, "pairgraph")
       // edge endpoints only: every consumer (CC, LPA, triangles, d15)
       // reads doc_a/doc_b — persisting the r15 icnt/un verify integers
@@ -1551,9 +1732,10 @@ object DedupOps {
       prefixFilterPairs(s, dir, threshold)
         .select("doc_a", "doc_b")
         .write.mode("overwrite").parquet(p)
-      p
+      (p, s.read.parquet(p).schema)
     })
-    s.read.parquet(path)
+    // a plain parquet read infers the schema with one Spark job per call
+    s.read.schema(schema).parquet(path)
   }
 
   /** Symmetric adjacency of [[sharedPairGraph]], persisted ONCE as a
@@ -1578,7 +1760,11 @@ object DedupOps {
     val fp = inputFingerprint(s, dir)
     val key = (s.sparkContext.applicationId, fp, threshold)
     val table = adjMemo.getOrElseUpdate(key, {
-      val name = s"graft_adj_${fp.take(12)}_${(threshold * 100).round}"
+      // the exact threshold in the name (Double.toString round-trips):
+      // a rounded form maps 0.9 and 0.901 to one table, and the second
+      // build would overwrite the first memo entry's adjacency
+      val name = s"graft_adj_${fp.take(12)}_" +
+        threshold.toString.replace('.', 'p').replace('-', 'm')
       // the warehouse DIRECTORY outlives the in-memory catalog: a table
       // written by a previous application leaves its location on disk
       // while the fresh catalog has no entry, and saveAsTable then fails
@@ -1614,14 +1800,20 @@ object DedupOps {
   }
 
   private[graft] def prefixFilterPairsOn(sets0: DataFrame,
-      threshold: Double): DataFrame = {
+      threshold: Double): DataFrame =
+    prefixFilterPairsAndSets(sets0, threshold)._1
+
+  /** [[prefixFilterPairsOn]] plus the materialized sets frame, with any
+    * extra columns `sets0` carried, for a caller that reads them again. */
+  private[graft] def prefixFilterPairsAndSets(sets0: DataFrame,
+      threshold: Double): (DataFrame, DataFrame) = {
     // sets feeds three consumers (prefix build + both verify sides) —
     // materialize once, the d09/containment discipline; exactVerify's
     // broadcast-size guard rides this action as an observation (was a
     // separately scheduled aggregate job, guide §2.6)
     val (sets, m) = Materialize.observed(sets0, "sets", setsEstMetrics)
-    exactVerify(sets, prefixCandidatesOn(sets, threshold), threshold,
-      est = Some(estOf(m)))
+    (exactVerify(sets, prefixCandidatesOn(sets, threshold), threshold,
+      est = Some(estOf(m))), sets)
   }
 
   val d07 = Q("d07_allpairs_jaccard",
@@ -2230,7 +2422,7 @@ object DedupOps {
     (s, dir) => {
       val cc = connectedComponents(
         sharedPairGraph(s, dir).select("doc_a", "doc_b"),
-        symAdj = Some(sharedAdjacency(s, dir)))
+        symAdj = Some(() => sharedAdjacency(s, dir)))
         .select(col("node").as("doc_id"), col("component").as("cluster_id"))
       val quality = TextOps.withQualityQk(Tables.df(s, dir, "documents"))
         .select(col("doc_id"), (col("qk") / 10000.0).as("quality"))

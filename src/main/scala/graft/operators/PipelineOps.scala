@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
   * Nothing materializes an intermediate corpus copy. */
 object PipelineOps {
 
-  /** Documents surviving quality + language + exact-dedup + near-dup
-    * stages (exposed for the spec). */
+  /** (doc_id, lang, n_tokens) of the documents surviving the quality,
+    * language, exact-dedup and near-dup stages (exposed for the spec). */
   private[graft] def curated(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.df(s, dir, "documents")
       .withColumn("n_tokens",
@@ -50,12 +50,15 @@ object PipelineOps {
     // near-dup removal: exact prefix-filter pairs (d07 kernel) over the
     // survivors; drop every doc whose connected component has a smaller
     // member (the component min is the kept representative)
-    val pairs = DedupOps.prefixFilterPairsOn(
-      DedupOps.hashedWordSetsOf(deduped), 0.9)
+    val (pairs, sets) = DedupOps.prefixFilterPairsAndSets(
+      DedupOps.hashedWordSetsOf(deduped, keep = Seq("lang", "n_tokens")), 0.9)
     val drops = DedupOps.connectedComponents(pairs.select("doc_a", "doc_b"))
       .filter(col("component") =!= col("node"))
       .select(col("node").as("doc_id"))
-    deduped.join(drops, Seq("doc_id"), "left_anti")
+    // the survivors' roll-up columns ride the kernel's materialized sets
+    // frame: reading `deduped` again would recompute the quality gate,
+    // the md5 group-by and its join in the final action
+    sets.select("doc_id", "lang", "n_tokens").join(drops, Seq("doc_id"), "left_anti")
   }
 
   // ---------------------------------------------------------------- p01

@@ -58,11 +58,34 @@ class BucketedAdjacencySpec extends AnyFunSuite {
   test("d06 clusters match between bucketed and in-memory sym paths") {
     val pairs = DedupOps.sharedPairGraph(spark, dir).select("doc_a", "doc_b")
     val adj = DedupOps.sharedAdjacency(spark, dir)
-    val got = DedupOps.connectedComponents(pairs, symAdj = Some(adj))
+    val got = DedupOps.connectedComponentsDistributed(pairs, symAdj = Some(adj))
       .collect().map(r => (r.get(0), r.get(1))).toSet
-    val want = DedupOps.connectedComponents(pairs)
+    val want = DedupOps.connectedComponentsDistributed(pairs)
       .collect().map(r => (r.get(0), r.get(1))).toSet
     assert(got == want && got.nonEmpty)
+  }
+
+  test("d06 clusters match between the driver path and a lowered-cap distributed run") {
+    val pairs = DedupOps.sharedPairGraph(spark, dir).select("doc_a", "doc_b")
+    val adj = () => DedupOps.sharedAdjacency(spark, dir)
+    val viaDriver = DedupOps.connectedComponents(pairs, symAdj = Some(adj))
+      .collect().map(r => (r.get(0), r.get(1))).toSet
+    assert(DedupOps.lastPropagationRounds == 0, "expected the driver path")
+    val viaLoop = DedupOps.componentsBySize(pairs, 50, 8, Some(adj), cap = 0)
+      .collect().map(r => (r.get(0), r.get(1))).toSet
+    assert(DedupOps.lastPropagationRounds > 0, "expected the propagation loop")
+    assert(viaDriver == viaLoop && viaDriver.nonEmpty)
+  }
+
+  test("adjacencies of thresholds that round alike stay apart") {
+    def rows(t: Double): Set[(Any, Any)] = DedupOps.sharedAdjacency(spark, dir, t)
+      .collect().map(r => (r.get(0), r.get(1))).toSet
+    val at90 = rows(0.9)
+    val at901 = rows(0.901)
+    // the fixture has pairs at Jaccard exactly 0.9, so the graphs differ
+    assert(at901.size < at90.size)
+    val unchanged = rows(0.9) == at90
+    assert(unchanged, "building the 0.901 adjacency changed the 0.9 one")
   }
 
   test("g04 LPA labels match between bucketed and in-memory sym paths") {

@@ -50,6 +50,22 @@ class ProfileSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("plan shape: warm Spark jobs per run of d06 and p01 at sf0.001") {
+    // job counts are deterministic for a fixture and conf; pinned so that
+    // a change to them needs a stated reason. d06: the bounded edge read
+    // and its final sort (CC labels on the driver); p01: the prefix
+    // kernel, the observed adjacency materialize and the driver CC
+    // collect, then the roll-up over the materialized sets
+    val session = spark.newSession() // confs other specs set stay out
+    session.conf.set("spark.sql.shuffle.partitions", "4")
+    session.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "32")
+    val runs = Profile.time(session, sf,
+      Seq("d06_dedup_clusters", "p01_corpus_curation").map(Queries.byName),
+      runs = 2, bracket = false)
+    val warm = runs.filter(_.round == 1).map(r => r.query -> r.jobs).toMap
+    assert(warm == Map("d06_dedup_clusters" -> 5, "p01_corpus_curation" -> 28), warm)
+  }
+
   test("an unknown mode or name fails with a usage line listing every mode") {
     assert(Seq("time <sfDir>", "count <sfDir>", "plan <sfDir>")
       .forall(Profile.Usage.contains))
